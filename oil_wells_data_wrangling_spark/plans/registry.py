@@ -81,27 +81,27 @@ def _load_all() -> None:
 # cannot red the suite — the r10 round ended with exactly that one
 # red, by design but noisily.
 _WINDOW_PRIORITY = [
-    # -- round 15 forced cohort: the 50 names whose last green driver
-    #    row is round 10 (registry FROZEN at 250; every window from
-    #    here is the full R-5 cohort, re-derived from the committed
-    #    CORRECTNESS_r*.json history — matches the recorded ROUND-15
-    #    ROTATION note below exactly). Alphabetical.
-    "ann_pq_trained", "approx_distinct", "approx_percentiles",
-    "bigram_lift", "blocklist_filter", "bm25_topk",
-    "bpe_train_batched", "bpe_train_steps", "contamination_report",
-    "correlated_avg_filter", "crawl_to_corpus", "custdist",
-    "dataset_card_stats", "dedup_cross", "disjunctive_filter_revenue",
-    "distinct_count", "domain_pagerank", "dpo_pairs",
-    "dup_ngram_fraction", "embedding_outliers", "events_attribution",
-    "events_distinct_windowed", "events_enrich", "events_rate_limit",
-    "events_topk", "events_transitions", "html_to_text",
-    "l_diversity_report", "link_hits", "mix_schedule", "pq_train",
-    "sample_corpus", "sft_pack", "shard_stats", "simhash_pairs",
-    "span_corruption", "sql_serving", "stratified_sample",
-    "stream_warc_ingest", "text_chunks", "tfidf_topk", "token_count",
-    "tokenizer_vocab_prune", "train_val_split", "url_canonical",
-    "url_stats", "vector_normalize", "vocab_topk", "warc_pipeline",
-    "zorder_stats",
+    # -- round 16 forced cohort: the 50 names whose last green
+    #    CORRECTNESS row is round 11 (registry FROZEN at 250; every
+    #    window from here is the full R-5 cohort, re-derived from the
+    #    committed CORRECTNESS_r*.json history — matches the recorded
+    #    ROUND-16 ROTATION note below exactly). Alphabetical.
+    "bloom_blocklist", "curriculum_schedule", "dp_mean_clipped",
+    "events_window_agg", "fim_plan", "fingerprint_diff", "group_split",
+    "grpo_advantage", "hard_negative_mining", "hll_persist_incremental",
+    "hll_union_daily", "html_table", "idle_rich_customers",
+    "importance_resample", "incremental_rollup", "join_region_rollup",
+    "join_revenue_topn", "json_props", "kcenter_select",
+    "lang_mismatch_matrix", "late_shipment_priority",
+    "license_classify", "mix_balance", "mm_audio_chunks",
+    "mm_caption_align", "mm_frame_sample", "mm_meta", "mm_resize",
+    "moe_router_stats", "mrl_recall_eval", "neardup_incremental",
+    "pca_top_component", "preference_bt", "rarity_score", "rrf_fusion",
+    "scd2_apply", "scd2_attribution", "secrets_scan",
+    "semdedup_clusters", "soft_dedup_weights", "stream_cdc_apply",
+    "stream_crawl_corpus", "text_augment_plan", "top_supplier_revenue",
+    "ulm_tokenize", "ulm_train_steps", "vocab_coverage",
+    "warc_dedup_digest", "window_rank", "window_running",
 ]
 
 
@@ -143,8 +143,9 @@ def headline_queries() -> dict[str, QueryFn]:
 # replacement) but the 250 cap is absolute — the rotation-invariant
 # test in tests/test_plans.py enforces the capacity math.
 #
-# ROUND-16 ROTATION, FORCED (recorded r15): the r16 window IS the r11
-# cohort — the 50 names whose latest green driver row is round 11
+# ROUND-16 ROTATION, FORCED (recorded r15; APPLIED: _WINDOW_PRIORITY
+# above is exactly this set): the r16 window IS the r11 cohort — the
+# 50 names whose latest green CORRECTNESS row is round 11
 # (CORRECTNESS_r15 re-greens the r10 cohort and cannot change this
 # set; re-derive from the committed CORRECTNESS_r*.json history as
 # tests/test_plans.py::_driver_row_history does to confirm):
@@ -163,8 +164,8 @@ def headline_queries() -> dict[str, QueryFn]:
 #   stream_cdc_apply, stream_crawl_corpus, text_augment_plan,
 #   top_supplier_revenue, ulm_tokenize, ulm_train_steps,
 #   vocab_coverage, warc_dedup_digest, window_rank, window_running
-# The r16 builder's FIRST commit swaps _WINDOW_PRIORITY to exactly
-# this set (alphabetical), then depth + §2.E only.
+# Applied: _WINDOW_PRIORITY is exactly this set (alphabetical); from
+# here, depth + §2.E only.
 # ---------------------------------------------------------------------------
 # ROUND-15 ROTATION, FORCED (recorded r14): the registry is FROZEN at
 # 250 and every cohort from here is exactly 50 names, so each round's

@@ -10,10 +10,12 @@ PRECOMPUTES the serving payload (``serve_wells``/``serve_wells_full`` →
 ``sinks.export_json`` partitioned by the viewport key) and the web tier
 is a dumb static reader — no Spark, no database in the request path.
 This module is that web tier, stdlib-only (``http.server``): ``/wells``
-streams every partition as a chunked response (constant memory — the
-export is never buffered whole), ``/wells?<key>=<value>`` reads exactly
-one partition directory (the viewport fetch the export layout was
-designed for — cf. ``spatial_bbox``); a filter on a non-partition
+streams every partition as a chunked response, one ~64 KiB block of
+the export's own JSON lines per chunk (memory bounded by one block —
+the export is never buffered whole, and rows are spliced with their
+partition values, not re-serialized), ``/wells?<key>=<value>`` reads
+exactly one partition directory (the viewport fetch the export layout
+was designed for — cf. ``spatial_bbox``); a filter on a non-partition
 column falls back to a streamed row-level filter with identical
 results. Any WSGI/CDN stack would do the same; a threaded stdlib
 server keeps the dependency surface at zero.
@@ -24,27 +26,49 @@ from __future__ import annotations
 import json
 import os
 import threading
+from collections.abc import Iterator
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from urllib.parse import parse_qsl, urlsplit
+from urllib.parse import parse_qsl, unquote, urlsplit
 
 
-def _iter_json_rows(root: str, partition: tuple[str, str] | None):
-    """Yield dict rows from a Spark JSON-lines export directory.
+# Bytes of export lines gathered into one response chunk: a viewport
+# read goes out in one or two send()s, and memory stays bounded by one
+# block however large the export grows.
+_BLOCK_BYTES = 64 * 1024
+
+# Spark's directory name for a null partition value; any other value
+# is %XX-escaped in the directory name.
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _iter_json_blocks(
+    root: str, partition: tuple[str, str] | None
+) -> Iterator[bytes]:
+    """Yield the rows of a Spark JSON-lines export directory as one JSON
+    array, in chunks of about ``_BLOCK_BYTES`` (the first opens the
+    array, the last closes it).
 
     Spark lays out ``<root>/part-*.json`` (unpartitioned) or
     ``<root>/<col>=<value>/part-*.json``; the partition column is
     encoded in the directory name, so it is re-attached to each row.
+    Rows are never re-serialized: each exported line is emitted as it
+    is, with the directory's partition key/values (decoded and encoded
+    once per directory) spliced in before its closing brace.
 
     ``partition`` prunes directories when its key IS the partition
-    column (the designed one-directory viewport fetch). When the key
+    column (the designed one-directory viewport fetch); it matches the
+    decoded value, a null partition matching ``"None"``. When the key
     is not a partition column — unpartitioned export, or a query on
-    some other field — rows stream through unpruned and are filtered
-    per-row here, so ``?foo=1`` means the same thing against every
-    export layout (ADVICE r5: the old code returned the full dataset
-    for one layout and [] for the other)."""
-    for dirpath, _dirnames, filenames in os.walk(root):
+    some other field — each row is parsed only to decide whether to
+    keep it, so ``?foo=1`` means the same thing against every export
+    layout (ADVICE r5: the old code returned the full dataset for one
+    layout and [] for the other)."""
+    head = b"["
+    block: list[bytes] = []
+    size = 0
+    for dirpath, dirnames, filenames in os.walk(root):
         rel = os.path.relpath(dirpath, root)
-        part_kv: dict[str, str] = {}
+        part_kv: dict[str, str | None] = {}
         pruned = False
         if rel != ".":
             for seg in rel.split(os.sep):
@@ -52,32 +76,55 @@ def _iter_json_rows(root: str, partition: tuple[str, str] | None):
                     pruned = True  # not a partition dir (e.g. _temporary)
                     break
                 k, v = seg.split("=", 1)
+                k = unquote(k)
+                v = None if v == _NULL_PARTITION else unquote(v)
                 part_kv[k] = v
-                if partition is not None and k == partition[0] and v != partition[1]:
+                if partition is not None and k == partition[0] and (
+                    str(v) != partition[1]
+                ):
                     pruned = True
                     break
         if pruned:
+            dirnames.clear()
             continue
-        row_filter = (
-            partition
+        # '{"col":"value"}': replaces the closing brace of every row
+        # (after a comma) or stands in for an empty row '{}'
+        kv_obj = json.dumps(part_kv, separators=(",", ":")).encode("ascii")
+        filter_key = (
+            partition[0]
             if partition is not None and partition[0] not in part_kv
             else None
         )
         for fn in sorted(filenames):
             if not fn.startswith("part-") or not fn.endswith(".json"):
                 continue
-            with open(os.path.join(dirpath, fn), encoding="utf-8") as f:
-                for line in f:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    row = json.loads(line)
-                    row.update(part_kv)
-                    if row_filter is not None and (
-                        str(row.get(row_filter[0])) != row_filter[1]
-                    ):
-                        continue
-                    yield row
+            with open(os.path.join(dirpath, fn), "rb") as f:
+                while lines := f.readlines(_BLOCK_BYTES):
+                    for line in lines:
+                        line = line.strip()
+                        # (json.loads of str beats json.loads of bytes,
+                        # which sniffs the encoding on every call)
+                        if not line or (
+                            filter_key is not None
+                            and str(json.loads(line.decode()).get(filter_key))
+                            != partition[1]
+                        ):
+                            continue
+                        if part_kv:
+                            line = (
+                                kv_obj
+                                if line == b"{}"
+                                else line[:-1] + b"," + kv_obj[1:]
+                            )
+                        block.append(line)
+                        size += len(line)
+                    if size >= _BLOCK_BYTES:
+                        yield head + b",".join(block)
+                        head, block, size = b",", [], 0
+    if block or head == b"[":
+        yield head + b",".join(block) + b"]"
+    else:
+        yield b"]"
 
 
 _CONTENT_TYPES = {
@@ -98,13 +145,12 @@ class _WellsHandler(BaseHTTPRequestHandler):
     # can live outside the package).
     static_dir: str = os.path.join(os.path.dirname(__file__), "static")
     protocol_version = "HTTP/1.1"  # chunked transfer needs 1.1
+    # headers and a small body go out at once instead of waiting for the
+    # client's delayed ACK (~40 ms per keep-alive request otherwise)
+    disable_nagle_algorithm = True
 
     def log_message(self, *args) -> None:  # quiet test runs
         pass
-
-    def _write_chunk(self, data: bytes) -> None:
-        if data:
-            self.wfile.write(b"%x\r\n" % len(data) + data + b"\r\n")
 
     def _send_static(self, name: str) -> None:
         root = os.path.realpath(self.static_dir)
@@ -149,21 +195,16 @@ class _WellsHandler(BaseHTTPRequestHandler):
         if not os.path.isdir(self.export_dir):
             self.send_error(500)
             return
-        # Chunked transfer: the export streams row by row — memory is
-        # bounded by one row regardless of export size (ADVICE r5 /
+        # Chunked transfer: the export streams block by block — memory is
+        # bounded by one block regardless of export size (ADVICE r5 /
         # verdict item 5: the old handler buffered the whole dataset
         # for an unfiltered /wells).
         self.send_response(200)
         self.send_header("Content-Type", "application/json")
         self.send_header("Transfer-Encoding", "chunked")
         self.end_headers()
-        first = True
-        self._write_chunk(b"[")
-        for row in _iter_json_rows(self.export_dir, partition):
-            piece = json.dumps(row).encode("utf-8")
-            self._write_chunk(piece if first else b"," + piece)
-            first = False
-        self._write_chunk(b"]")
+        for block in _iter_json_blocks(self.export_dir, partition):
+            self.wfile.write(b"%x\r\n%s\r\n" % (len(block), block))
         self.wfile.write(b"0\r\n\r\n")
 
 

@@ -5,8 +5,9 @@ same name over the same routes as ``serving.serve_wells_http``).
 
 Same architecture as serving.py: the request path reads a precomputed
 partitioned JSON export — no Spark, no database per request. ``/wells``
-streams rows through the WSGI iterator (the server's equivalent of the
-threaded tier's chunked transfer: memory stays bounded by one row),
+streams the same ~64 KiB blocks of spliced export lines through the
+WSGI iterator (the server's equivalent of the threaded tier's chunked
+transfer: memory stays bounded by one block),
 ``/wells?<key>=<value>`` prunes to one partition directory when the key
 is the partition column, ``/`` ``/map`` ``/static/**`` serve the same
 static files with the same realpath containment check.
@@ -19,14 +20,13 @@ app.wsgi. Programmatic use: ``make_wsgi_app(export_dir)``.
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Iterator
 from urllib.parse import parse_qsl
 
 from oil_wells_data_wrangling_spark.serving import (
     _CONTENT_TYPES,
-    _iter_json_rows,
+    _iter_json_blocks,
 )
 
 _PKG_STATIC = os.path.join(os.path.dirname(__file__), "static")
@@ -82,13 +82,7 @@ def make_wsgi_app(export_dir: str, static_dir: str | None = None):
         start_response(
             "200 OK", [("Content-Type", "application/json")]
         )  # no Content-Length: the WSGI server streams the iterator
-        first = True
-        yield b"["
-        for row in _iter_json_rows(export_dir, partition):
-            piece = json.dumps(row).encode("utf-8")
-            yield piece if first else b"," + piece
-            first = False
-        yield b"]"
+        yield from _iter_json_blocks(export_dir, partition)
 
     def application(environ, start_response):
         path = environ.get("PATH_INFO", "/")

@@ -6,20 +6,74 @@ but with the join precomputed instead of run per request)."""
 from __future__ import annotations
 
 import json
+import os
+import threading
+import urllib.parse
 import urllib.request
+import wsgiref.simple_server
 
+import pytest
 from pyspark.sql import functions as F
 
 from oil_wells_data_wrangling_spark.operators.spatial import with_coordinates
 from oil_wells_data_wrangling_spark.serving import serve_wells_http
 from oil_wells_data_wrangling_spark.sources.readers import load_tables
 from oil_wells_data_wrangling_spark.sources.sinks import export_json
+from oil_wells_data_wrangling_spark.wsgi import make_wsgi_app
 
 
 def _get(url: str):
     with urllib.request.urlopen(url, timeout=30) as r:
         assert r.headers["Content-Type"] == "application/json"
         return json.loads(r.read())
+
+
+class _QuietWSGIHandler(wsgiref.simple_server.WSGIRequestHandler):
+    def log_message(self, *a):
+        pass
+
+
+def _wsgi_server(export_dir: str):
+    """A real WSGI server (wsgiref) over ``make_wsgi_app``, on a daemon
+    thread, so the streaming iterator path runs end-to-end."""
+    server = wsgiref.simple_server.make_server(
+        "127.0.0.1", 0, make_wsgi_app(export_dir),
+        handler_class=_QuietWSGIHandler,
+    )
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    return server
+
+
+def _canon(rows) -> list[str]:
+    return sorted(json.dumps(r, sort_keys=True) for r in rows)
+
+
+def _rows_from_export_lines(root: str) -> list[dict]:
+    """The reference reading of an export: ``json.loads`` of every line
+    plus the directory's partition key/values, decoded the way Spark
+    encodes them (null as the Hive default partition, %XX escapes)."""
+    rows = []
+    for dirpath, _dirs, files in os.walk(root):
+        rel = os.path.relpath(dirpath, root)
+        segs = [] if rel == "." else rel.split(os.sep)
+        if any("=" not in seg for seg in segs):
+            continue
+        part = {}
+        for seg in segs:
+            k, v = seg.split("=", 1)
+            part[urllib.parse.unquote(k)] = (
+                None if v == "__HIVE_DEFAULT_PARTITION__"
+                else urllib.parse.unquote(v)
+            )
+        for fn in files:
+            if fn.startswith("part-") and fn.endswith(".json"):
+                with open(os.path.join(dirpath, fn), "rb") as f:
+                    rows += [
+                        {**json.loads(line), **part}
+                        for line in f
+                        if line.strip()
+                    ]
+    return rows
 
 
 def test_http_serving_over_partitioned_export(spark, sf_dir, tmp_path):
@@ -153,8 +207,6 @@ def test_static_lib_assets_served_offline(spark, sf_dir, tmp_path):
         ) as r:
             assert r.headers["Content-Type"] == "image/png"
         # traversal out of the static root must 404, not leak
-        import pytest
-
         for esc in ("/static/../secret.txt", "/static/%2e%2e/secret.txt"):
             with pytest.raises(urllib.error.HTTPError) as e:
                 urllib.request.urlopen(f"{base}{esc}", timeout=30)
@@ -169,8 +221,6 @@ def test_static_lib_assets_served_offline(spark, sf_dir, tmp_path):
 def test_map_page_prefers_local_leaflet_with_cdn_fallback():
     """The shipped map.html must try /static/lib/leaflet first and only
     fall back to the CDN — the contract vendor_leaflet.py fulfills."""
-    import os
-
     import oil_wells_data_wrangling_spark as pkg
 
     page = open(
@@ -277,19 +327,7 @@ def test_wsgi_application_parity_with_http_tier(spark, sf_dir, tmp_path):
     the same static containment, and the same 404s as the threaded
     HTTP tier — driven through a REAL WSGI server (wsgiref) so the
     streaming iterator path is exercised end-to-end."""
-    import os
-    import threading
     import urllib.error
-    import wsgiref.simple_server
-
-    from pyspark.sql import functions as F
-
-    from oil_wells_data_wrangling_spark.operators.spatial import (
-        with_coordinates,
-    )
-    from oil_wells_data_wrangling_spark.sources.readers import load_tables
-    from oil_wells_data_wrangling_spark.sources.sinks import export_json
-    from oil_wells_data_wrangling_spark.wsgi import make_wsgi_app
 
     pos = with_coordinates(load_tables(spark, sf_dir).supplier).withColumn(
         "band", (F.col("cell_lat") / 30).cast("int")
@@ -302,14 +340,7 @@ def test_wsgi_application_parity_with_http_tier(spark, sf_dir, tmp_path):
         for r in export.collect()
     }
 
-    class _Quiet(wsgiref.simple_server.WSGIRequestHandler):
-        def log_message(self, *a):
-            pass
-
-    server = wsgiref.simple_server.make_server(
-        "127.0.0.1", 0, make_wsgi_app(path), handler_class=_Quiet
-    )
-    threading.Thread(target=server.serve_forever, daemon=True).start()
+    server = _wsgi_server(path)
     try:
         base = f"http://127.0.0.1:{server.server_port}"
         rows = _get(f"{base}/wells")
@@ -350,6 +381,83 @@ def test_wsgi_application_parity_with_http_tier(spark, sf_dir, tmp_path):
     assert len(json.loads(body)) == len(want)
 
 
+# Rows whose JSON lines exercise the splice: several part files per
+# directory (two records per file), an all-null row (Spark writes '{}'),
+# strings with quotes, backslashes, control and non-ASCII characters,
+# and partition values Spark writes as the Hive default partition (null)
+# or %XX-escapes in the directory name ('a/b', '50%', 'q"uote').
+_SPLICE_ROWS = [
+    (1, "SHALE-1", 'say "hi"', 1.5),
+    (2, "SHALE-1", "back\\slash \\\" mixed", None),
+    (3, "SHALE-1", "Ünïcødé — 油井", 2.0),
+    (4, "a/b", "tab\tnew\nline", -0.25),
+    (5, "50%", None, 3.0),
+    (6, 'q"uote', "{not: json}", 4.0),
+    (7, "Ünï", "é", 5.0),
+    (8, None, "no formation", 6.0),
+    (None, None, None, None),
+]
+
+
+@pytest.mark.parametrize("partition_col", ["formation", None])
+def test_served_rows_are_the_export_lines(spark, tmp_path, partition_col):
+    """Both tiers serve exactly json.loads(line) + the decoded partition
+    keys of every exported line — null partitions as null, escaped
+    directory names decoded — and ?key=value filters match the decoded
+    value the same way on either export layout."""
+    df = spark.createDataFrame(
+        _SPLICE_ROWS,
+        "doc_id int, formation string, name string, depth double",
+    ).repartition(2)
+    path = str(tmp_path / "splice_json")
+    export_json(df, path, partition_col=partition_col, max_records_per_file=2)
+
+    want = _rows_from_export_lines(path)
+    # Spark drops a line's null fields; the partition column is always
+    # re-attached, null included
+    assert _canon(want) == _canon(
+        {k: v for k, v in r.asDict().items()
+         if v is not None and k != partition_col}
+        | ({partition_col: r[partition_col]} if partition_col else {})
+        for r in df.collect()
+    )
+    lines = [
+        line.strip()
+        for part in (tmp_path / "splice_json").glob("**/part-*.json")
+        for line in part.read_bytes().splitlines()
+    ]
+    assert b"{}" in lines  # the all-null row really is an empty object
+    if partition_col:
+        dirs = set(os.listdir(path))
+        assert {"formation=__HIVE_DEFAULT_PARTITION__", "formation=a%2Fb",
+                "formation=50%25"} <= dirs
+        shale = os.path.join(path, "formation=SHALE-1")
+        assert len([f for f in os.listdir(shale) if f.endswith(".json")]) > 1
+
+    queries = [
+        "", "formation=SHALE-1", "formation=a%2Fb", "formation=50%25",
+        "formation=q%22uote", "formation=%C3%9Cn%C3%AF", "formation=None",
+        "doc_id=3", "no_such_col=zzz",
+    ]
+    http = serve_wells_http(path)
+    wsgi = _wsgi_server(path)
+    try:
+        for server in (http, wsgi):
+            base = f"http://127.0.0.1:{server.server_port}/wells"
+            for query in queries:
+                got = _get(f"{base}?{query}")
+                kv = urllib.parse.parse_qsl(query)
+                expect = [
+                    r for r in want if all(str(r.get(k)) == v for k, v in kv)
+                ]
+                assert _canon(got) == _canon(expect), (server, query)
+                # every filter but the unknown column selects some rows
+                assert expect or query == "no_such_col=zzz"
+    finally:
+        http.shutdown()
+        wsgi.shutdown()
+
+
 def test_band_fetch_reads_exactly_one_partitions_files(
     spark, sf_dir, tmp_path, monkeypatch
 ):
@@ -357,8 +465,6 @@ def test_band_fetch_reads_exactly_one_partitions_files(
     the one partition directory, not walk-and-filter — tracked by
     shadowing the serving module's open() and comparing against the
     band directory's exact file inventory."""
-    import os
-
     from oil_wells_data_wrangling_spark import serving
 
     pos = with_coordinates(load_tables(spark, sf_dir).supplier).withColumn(
@@ -378,9 +484,11 @@ def test_band_fetch_reads_exactly_one_partitions_files(
         opened.append(str(p))
         return real_open(p, *a, **k)
 
-    # module-global shadows the builtin inside _iter_json_rows only
+    # module-global shadows the builtin inside _iter_json_blocks only
     monkeypatch.setattr(serving, "open", tracking_open, raising=False)
-    rows = list(serving._iter_json_rows(path, ("band", str(band))))
+    rows = json.loads(
+        b"".join(serving._iter_json_blocks(path, ("band", str(band))))
+    )
     assert rows and all(str(r["band"]) == str(band) for r in rows)
 
     band_dir = os.path.join(path, f"band={band}")
